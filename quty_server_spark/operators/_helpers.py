@@ -11,7 +11,11 @@ decimal sums are Tungsten-native (no UDF), and partial aggregation
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import os
+import shutil
+from collections.abc import Iterable
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from quty_server_spark.sources.tables import load_table  # noqa: F401  (re-export)
@@ -84,3 +88,36 @@ def ensure_checkpoint_dir(spark) -> None:
         d = tempfile.mkdtemp(prefix="quty_ckpt_")
         atexit.register(shutil.rmtree, d, ignore_errors=True)
         spark.sparkContext.setCheckpointDir(d)
+
+
+def overwrite_partitions(
+    frame: DataFrame, path: str, part_col: str, affected: Iterable,
+    *sort_cols: str,
+) -> None:
+    """The partition-scoped rewrite shared by every artifact lifecycle
+    verb (retraction, tombstone compaction, label retraction, shard
+    compaction): dynamically overwrite the ``part_col=`` directories
+    ``frame`` holds rows for (``partitionOverwriteMode=dynamic``; every
+    other directory keeps its bytes), sorted within each file by
+    ``(part_col, *sort_cols)``, THEN remove each ``affected`` partition
+    the write left empty — dynamic overwrite cannot delete a partition
+    absent from its input. The written partition set is an
+    ``Observation`` (``collect_set``) on the write itself, so listing it
+    costs no second pass over ``frame``; ``affected`` is a bounded list
+    of partition-key values (metadata grain, never rows) and so is the
+    observed set."""
+    obs = Observation()
+    (
+        frame.observe(obs, F.collect_set(part_col).alias("parts"))
+        .sortWithinPartitions(part_col, *sort_cols)
+        .write.option("partitionOverwriteMode", "dynamic")
+        .partitionBy(part_col)
+        .mode("overwrite")
+        .parquet(path)
+    )
+    written = set(obs.get["parts"])
+    for v in affected:
+        if v not in written:
+            shutil.rmtree(
+                os.path.join(path, f"{part_col}={v}"), ignore_errors=True
+            )

@@ -1047,7 +1047,7 @@ def sink_media_signature_artifact_retract_compacted(
 
     Scale: compaction reads only the partitions holding a victim row
     (the narrow (id, partition) semi-join derives the set) and rewrites
-    them with the DPP-scoped dynamic overwrite; for media the stake is
+    them with the partition-pruned dynamic overwrite; for media the stake is
     the same as the gate's — nothing is ever re-decoded, the takedown's
     cost follows the victims, not the lake."""
     import shutil

@@ -17,7 +17,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from quty_server_spark.operators._helpers import load_table
+from quty_server_spark.operators._helpers import (
+    load_table,
+    overwrite_partitions,
+)
 from quty_server_spark.plans.registry import registry
 
 # Regexes shared by the Spark path and the DuckDB twin (Java regex and
@@ -1752,9 +1755,6 @@ def compact_training_shards_inplace(
     the fresh snapshot) and writes only affected directories, keeping
     write parallelism decoupled from shard count via the shared
     (shard, doc_id) repartition."""
-    import os
-    import shutil
-
     if fresh is None:
         fresh = corpus_training_snapshot(spark, sf_dir).select(
             *SNAPSHOT_COLS
@@ -1770,21 +1770,15 @@ def compact_training_shards_inplace(
     repl = fresh.withColumn("shard", _shard_col()).filter(
         F.col("shard").isin(affected)
     )
-    (
-        repl.repartition(4 * N_TRAIN_SHARDS, "shard", "doc_id")
-        .sortWithinPartitions("shard", "doc_id")
-        .write.option("partitionOverwriteMode", "dynamic")
-        .partitionBy("shard")
-        .mode("overwrite")
-        .parquet(path)
+    # An affected shard left with ZERO fresh rows is removed by the
+    # shared rewrite (dynamic overwrite cannot delete it).
+    overwrite_partitions(
+        repl.repartition(4 * N_TRAIN_SHARDS, "shard", "doc_id"),
+        path,
+        "shard",
+        affected,
+        "doc_id",
     )
-    # Dynamic overwrite cannot delete a partition absent from its
-    # input: an affected shard left with ZERO fresh rows is removed
-    # explicitly (same metadata-grain loop as the retraction device).
-    kept = {r[0] for r in repl.select("shard").distinct().collect()}
-    for s in affected:
-        if s not in kept:
-            shutil.rmtree(os.path.join(path, f"shard={s}"), ignore_errors=True)
     return affected
 
 

@@ -6,15 +6,16 @@ the nightly gates through its leftover band rows, minhash rows, IVF
 postings, and passage digests, and the clusters it bridged must be
 re-labeled (a removal can SPLIT a component).
 
-Physical device: the home-bucket/DPP rewrite the relabel APPLY proved
-(operators/dedup.py apply_cluster_label_maintenance) — read ONLY the
-partitions holding victim rows (a broadcast join on the partition
-column, dynamic partition pruning keeps every other directory unread),
-drop the victims with a broadcast anti-join, and overwrite those
-partitions in place (``partitionOverwriteMode=dynamic``). Partitions
-whose every row was a victim are removed explicitly (a driver-side
-loop bounded by the artifact's PARTITION count — metadata grain, never
-rows).
+Physical device: the partition-scoped rewrite the relabel APPLY proved
+(operators/dedup.py apply_cluster_label_maintenance) — collect the
+partitions holding victim rows ONCE as a bounded key list (metadata
+grain: at most the artifact's PARTITION count, never rows), read ONLY
+those partitions through a static ``part_col IN (...)`` partition
+filter (every other directory stays unread), drop the victims with a
+broadcast anti-join, and overwrite those partitions in place
+(``partitionOverwriteMode=dynamic``). Partitions whose every row was a
+victim are removed explicitly, against the written set the overwrite
+itself observes (``_helpers.overwrite_partitions``).
 
 Cost follows the victim set, not the lake, wherever the partition key
 can be derived from the victims themselves: the PASSAGE artifact's
@@ -40,7 +41,7 @@ Cluster-label retraction re-labels ONLY the affected clusters: victims'
 labels are located with one narrow columnar (node, lbl) scan (the
 unavoidable read given only doc ids; a node-grain sidecar would remove
 it), the affected labels' home buckets come from the ``_label_homes``
-sidecar (a DPP-pruned read, never a lake scan), and the surviving
+sidecar (a partition-pruned read, never a lake scan), and the surviving
 members are re-clustered from their OWN signatures through the exact
 labeling core every other consumer shares
 (:func:`~quty_server_spark.operators.dedup._labels_from_sigs`).
@@ -58,12 +59,17 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
+from pyspark.sql.types import StructType
 
-from quty_server_spark.operators._helpers import load_table
+from quty_server_spark.operators._helpers import (
+    load_table,
+    overwrite_partitions,
+)
 from quty_server_spark.operators.dedup import (
     _BRIDGE_FILL,
     _BRIDGE_WA,
@@ -146,63 +152,67 @@ def _retract_rows(
     spark: SparkSession,
     path: str,
     part_col: str,
-    affected: DataFrame,
+    affected: DataFrame | Iterable,
     victims: DataFrame,
     id_col: str,
     sort_key: str,
+    schema: StructType | None = None,
 ) -> None:
-    """The shared physical DELETE: read ONLY the affected partitions
-    (broadcast join on the partition column — DPP keeps every other
-    directory unread, plan-pinned in tests/test_scale_plans.py), drop
-    victim rows (broadcast anti-join), and dynamically overwrite those
-    partitions, preserving the within-file sort contract. Partitions
-    left with zero rows are removed explicitly — dynamic overwrite
-    cannot delete a partition absent from its input — via a driver
-    loop over the (metadata-grain) affected-partition list."""
-    affected = affected.select(
-        F.col(part_col)
-        .cast(dict(spark.read.parquet(path).dtypes)[part_col])
-        .alias(part_col)
-    ).distinct()
+    """The shared physical DELETE: collect the affected partition keys
+    ONCE (``affected`` is a frame of partition values, or already a
+    bounded list such as a band family's ``range(4)``), read ONLY those
+    partitions through a static partition filter (plan-pinned in
+    tests/test_scale_plans.py), drop victim rows (broadcast anti-join),
+    and dynamically overwrite those partitions, preserving the
+    within-file sort contract; partitions left with zero rows are
+    removed (:func:`overwrite_partitions`). ``schema`` is the artifact's
+    schema when the caller already inferred it, which saves the
+    inference job."""
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+    if isinstance(affected, DataFrame):
+        ptype = schema[part_col].dataType
+        affected = [
+            r[0]
+            for r in affected.select(F.col(part_col).cast(ptype))
+            .distinct()
+            .collect()
+        ]
+    parts = list(affected)
+    if not parts:
+        return
     # Materialize BEFORE overwriting: Spark (correctly) refuses a plan
     # that overwrites a path it is also reading. ONE eager checkpoint of
     # the post-anti-join survivors suffices (the anti-join is a map-side
-    # broadcast probe, so folding it into the same pass adds no shuffle)
-    # — checkpointing the touched rows separately first was a second
-    # full materialization of nearly the same bytes.
-    touched = _retract_touched_rows(spark, path, part_col, affected)
-    kept = touched.join(
-        broadcast(victims.withColumnRenamed(victims.columns[0], id_col)),
-        id_col,
-        "left_anti",
-    ).localCheckpoint(eager=True)
-    (
-        kept.sortWithinPartitions(part_col, sort_key)
-        .write.option("partitionOverwriteMode", "dynamic")
-        .partitionBy(part_col)
-        .mode("overwrite")
-        .parquet(path)
+    # broadcast probe, so folding it into the same pass adds no shuffle).
+    kept = (
+        _retract_touched_rows(spark, path, part_col, parts, schema)
+        .join(
+            broadcast(victims.withColumnRenamed(victims.columns[0], id_col)),
+            id_col,
+            "left_anti",
+        )
+        .localCheckpoint(eager=True)
     )
-    kept_parts = {r[0] for r in kept.select(part_col).distinct().collect()}
-    for r in affected.collect():
-        if r[0] not in kept_parts:
-            shutil.rmtree(
-                os.path.join(path, f"{part_col}={r[0]}"), ignore_errors=True
-            )
+    overwrite_partitions(kept, path, part_col, parts, sort_key)
 
 
 def _retract_touched_rows(
-    spark: SparkSession, path: str, part_col: str, affected: DataFrame
+    spark: SparkSession, path: str, part_col: str, parts: list,
+    schema: StructType,
 ) -> DataFrame:
     """The retraction's ENTIRE artifact read: the partitioned artifact
-    joined (broadcast) against the affected-partition set on the
-    partition column — dynamic partition pruning keeps every unaffected
-    directory unread (plan-pinned in tests/test_scale_plans.py).
-    Factored out because :func:`_retract_rows` checkpoints it
-    immediately (an RDD leaf is opaque to explain), so the pin targets
-    this builder — the same convention as
-    dedup._maintenance_touched_rows."""
-    return spark.read.parquet(path).join(broadcast(affected), part_col)
+    under a static ``part_col IN (parts)`` filter, so partition pruning
+    keeps every unaffected directory unread (plan- and metric-pinned in
+    tests/test_scale_plans.py). Factored out because
+    :func:`_retract_rows` checkpoints it immediately (an RDD leaf is
+    opaque to explain), so the pin targets this builder — the same
+    convention as dedup._maintenance_touched_rows."""
+    return (
+        spark.read.schema(schema)
+        .parquet(path)
+        .filter(F.col(part_col).isin(parts))
+    )
 
 
 def _copy_artifact(src: str, dst: str) -> None:
@@ -225,8 +235,10 @@ def retracted_artifact_paths(
     sf_dir) like every artifact builder.
 
     ``post`` (r17 continuation, guide §2.6): an optional
-    ``(family, path) -> None`` callback applied INSIDE each family's
-    worker thread right after its rewrite lands — the retract sink
+    ``(family, frame) -> None`` callback, ``frame`` being the family's
+    retracted artifact read back (with the schema the rewrite already
+    inferred), applied INSIDE each family's worker thread right after
+    its rewrite lands — the retract sink
     passes its per-family summary materializer here so the early
     families' read-back + summary aggregation overlaps the IVF
     straggler's rewrite instead of waiting for the whole pool. The
@@ -237,7 +249,7 @@ def retracted_artifact_paths(
     r17 optimization (guide §2.6 — overlap independent jobs): the four
     family retractions share NOTHING but the victim frame (checkpointed
     up front), so they run in a 4-thread pool instead of sequentially —
-    each thread's copy + DPP-scoped read + anti-join + dynamic
+    each thread's copy + partition-pruned read + anti-join + dynamic
     overwrite back-fills the others' straggler tails, and the
     driver-side ``copytree`` staging overlaps the other families' Spark
     jobs. The four BASE artifacts are materialized serially FIRST so
@@ -267,85 +279,51 @@ def retracted_artifact_paths(
             "ivf": ivf_postings_artifact(spark, sf_dir),
         }
 
-        # -- SimHash band artifact: band_id is content-keyed, so any
-        # victim touches all 4 dirs; affected = every band partition.
-        def _do_sig() -> str:
-            p = session_tmp_dir(spark, "quty_retract_sig", sf_dir)
-            _copy_artifact(base["sig"], p)
-            bands4 = spark.range(4).select(
-                F.col("id").cast("int").alias("band_id")
-            )
-            _retract_rows(
-                spark, p, "band_id", bands4, vic, "doc_id", "band_val"
-            )
-            return p
-
-        # -- MinHash band artifact: same content-keyed layout, 8 dirs.
-        def _do_minhash() -> str:
-            p = session_tmp_dir(spark, "quty_retract_minhash", sf_dir)
-            _copy_artifact(base["minhash"], p)
-            bands8 = spark.range(8).select(
-                F.col("id").cast("int").alias("band_id")
-            )
-            _retract_rows(spark, p, "band_id", bands8, vic, "doc_id", "sig")
-            return p
-
-        # -- Passage-digest artifact: affected prefixes derive from the
-        # victims' OWN windows (|victims| work); the other 15/16-ish of
-        # the lake's directories are never read. The selective filter
-        # makes Spark insert the DPP subquery (same device as the
-        # maintenance rewrite).
-        def _do_passage() -> str:
-            p = session_tmp_dir(spark, "quty_retract_passages", sf_dir)
-            _copy_artifact(base["passage"], p)
-            pfx = (
-                _passage_windows(vdocs)
-                .select(_passage_pfx())
-                .distinct()
-                .filter(F.col("pfx") >= "0")
-            )
-            _retract_rows(spark, p, "pfx", pfx, vic, "doc_id", "passage_md5")
-            return p
-
-        # -- IVF posting lists: affected cells derive from assigning the
-        # victims' vectors against the K-row centroid SIDECAR (never a
-        # posting scan); the quantizer itself is NOT retrained.
-        def _do_ivf() -> str:
-            p = session_tmp_dir(spark, "quty_retract_ivf", sf_dir)
-            _copy_artifact(base["ivf"], p)
+        def _scope(fam: str, p: str) -> tuple[DataFrame | range, DataFrame]:
+            # (affected partitions, victim ids) of one family. The two
+            # BAND artifacts are content-keyed (band_id), so any victim
+            # touches every band dir: 4 SimHash bands, 8 MinHash bands.
+            if fam == "sig":
+                return range(4), vic
+            if fam == "minhash":
+                return range(8), vic
+            # Passage prefixes derive from the victims' OWN windows
+            # (|victims| work); the other directories are never read.
+            if fam == "passage":
+                return _passage_windows(vdocs).select(_passage_pfx()), vic
+            # IVF cells derive from assigning the victims' vectors
+            # against the K-row centroid SIDECAR (never a posting scan);
+            # the quantizer itself is NOT retrained.
             vvec = _corpus(spark, sf_dir).filter(
                 F.col("vec_id") % 10 == RETRACT_MOD
             )
             cent = spark.read.parquet(os.path.join(p, "_centroids"))
-            cells = (
-                _ivf_cells_plan(vvec, cent)
-                .select("cell")
-                .distinct()
-                .filter(F.col("cell") >= 0)
+            return (
+                _ivf_cells_plan(vvec, cent).select("cell"),
+                vvec.select("vec_id").localCheckpoint(eager=True),
             )
-            vvic = vvec.select("vec_id").localCheckpoint(eager=True)
-            _retract_rows(spark, p, "cell", cells, vvic, "vec_id", "vec_id")
-            return p
 
-        tasks = {
-            "sig": _do_sig,
-            "minhash": _do_minhash,
-            "passage": _do_passage,
-            "ivf": _do_ivf,
-        }
-        def _run(fam: str, fn) -> str:
-            p = fn()
+        def _run(fam: str) -> str:
+            p = session_tmp_dir(spark, f"quty_retract_{fam}", sf_dir)
+            _copy_artifact(base[fam], p)
+            schema = spark.read.parquet(p).schema
+            part_col, id_col, sort_key = ARTIFACT_LAYOUTS[fam]
+            affected, victims = _scope(fam, p)
+            _retract_rows(
+                spark, p, part_col, affected, victims, id_col, sort_key,
+                schema,
+            )
             if post is not None:
-                post(fam, p)
+                post(fam, spark.read.schema(schema).parquet(p))
             return p
 
         with ThreadPoolExecutor(max_workers=4) as pool:
-            futs = {k: pool.submit(_run, k, fn) for k, fn in tasks.items()}
+            futs = {k: pool.submit(_run, k) for k in _RETRACT_FAMILY_ORDER}
             paths = {k: f.result() for k, f in futs.items()}
         cache[sf_dir] = paths
     elif post is not None:
         for fam, p in paths.items():
-            post(fam, p)
+            post(fam, spark.read.parquet(p))
     return paths
 
 
@@ -427,7 +405,7 @@ def sink_lake_artifacts_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_retract_semantics.py.
 
     Scale: per family, cost follows the victims — sidecar/window-derived
-    partition sets with DPP-pruned reads for passage and IVF; one
+    partition sets with statically pruned reads for passage and IVF; one
     shuffle-free columnar anti-join pass for the two content-hash-
     partitioned band families (the documented floor); zero read or
     rewrite of any unaffected passage prefix or IVF cell directory
@@ -442,10 +420,10 @@ def sink_lake_artifacts_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     summaries, in the same fixed union order."""
     summaries: dict[str, DataFrame] = {}
 
-    def _post(fam: str, p: str) -> None:
-        summaries[fam] = _tagged_family_summary(
-            fam, spark.read.parquet(p)
-        ).localCheckpoint(eager=True)
+    def _post(fam: str, frame: DataFrame) -> None:
+        summaries[fam] = _tagged_family_summary(fam, frame).localCheckpoint(
+            eager=True
+        )
 
     retracted_artifact_paths(spark, sf_dir, rebuild=True, post=_post)
     out = None
@@ -577,7 +555,8 @@ def compact_tombstones(
     """Scheduled compaction: apply the standing tombstones physically
     (the exact :func:`_retract_rows` device) and clear the sidecar.
     The affected-partition set comes from one narrow columnar pass of
-    (id, partition) semi-joined against the broadcast tombstones — the
+    (id, partition) semi-joined against the broadcast tombstones,
+    collected once by :func:`_retract_rows` as a bounded key list — the
     compaction job reads those partitions to rewrite them anyway. The
     live view is invariant across compaction (pinned)."""
     tp = os.path.join(path, _TOMBSTONES)
@@ -585,21 +564,23 @@ def compact_tombstones(
         return
     tomb = spark.read.parquet(tp).localCheckpoint(eager=True)
     vic = tomb.select(F.col("victim_id").alias(id_col))
+    schema = spark.read.parquet(path).schema
     affected = (
-        spark.read.parquet(path)
+        spark.read.schema(schema)
+        .parquet(path)
         .select(id_col, part_col)
         .join(broadcast(vic), id_col, "leftsemi")
         .select(part_col)
-        .distinct()
-        .localCheckpoint(eager=True)
     )
-    _retract_rows(spark, path, part_col, affected, vic, id_col, sort_key)
+    _retract_rows(
+        spark, path, part_col, affected, vic, id_col, sort_key, schema
+    )
     shutil.rmtree(tp, ignore_errors=True)
 
 
 # (family -> (partition column, id column, within-file sort key));
-# shared by the tombstone sink's compaction pin and any scheduled
-# compactor.
+# shared by the physical retraction, the tombstone sink's compaction pin
+# and any scheduled compactor.
 ARTIFACT_LAYOUTS: dict[str, tuple[str, str, str]] = {
     "sig": ("band_id", "doc_id", "band_val"),
     "minhash": ("band_id", "doc_id", "sig"),
@@ -703,8 +684,8 @@ def sink_lake_artifacts_retract_compacted(
     Scale: compaction reads ONLY the affected partitions (one narrow
     (id, partition) columnar pass semi-joined against the broadcast
     tombstones derives the set — the compactor rewrites those
-    partitions anyway) and rewrites them with the same DPP-scoped
-    dynamic-overwrite device as the immediate retract; the read tax the
+    partitions anyway) and rewrites them with the same statically
+    pruned dynamic-overwrite device as the immediate retract; the read tax the
     tombstone tier charges every consumer disappears at the price of
     one scheduled job whose cost follows the victims, not the lake."""
     paths = tombstoned_artifact_paths(spark, sf_dir, rebuild=True)
@@ -732,8 +713,9 @@ def apply_cluster_label_retraction(
        lbl) scan semi-joined against the broadcast victim set (the
        unavoidable read given only doc ids).
     2. SCOPE: the affected labels' home buckets via the
-       ``_label_homes`` sidecar — a DPP-pruned read of exactly those
-       directories, never a lake scan.
+       ``_label_homes`` sidecar, collected once as a bounded bucket
+       list — a statically pruned read of exactly those directories,
+       never a lake scan.
     3. RE-CLUSTER: the affected clusters' surviving members are
        re-signed from their own text and re-labeled through the shared
        labeling core (dedup._labels_from_sigs). Removing nodes only
@@ -754,17 +736,16 @@ def apply_cluster_label_retraction(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    aff_buckets = (
-        homes.join(broadcast(aff_lbl), "lbl", "leftsemi")
+    aff_buckets = [
+        r[0]
+        for r in homes.join(broadcast(aff_lbl), "lbl", "leftsemi")
         .select("lbl_bucket")
         .distinct()
-        # Selective Filter => Spark inserts the DPP subquery on the
-        # partitioned scan (same device as the maintenance rewrite).
-        .filter(F.col("lbl_bucket") >= 0)
-    )
-    touched = art.join(broadcast(aff_buckets), "lbl_bucket").localCheckpoint(
-        eager=True
-    )
+        .collect()
+    ]
+    touched = art.filter(
+        F.col("lbl_bucket").isin(aff_buckets)
+    ).localCheckpoint(eager=True)
     keep_rows = touched.join(broadcast(aff_lbl), "lbl", "left_anti")
     remaining = (
         touched.join(broadcast(aff_lbl), "lbl", "leftsemi")
@@ -788,24 +769,15 @@ def apply_cluster_label_retraction(
         # twice.
         .localCheckpoint(eager=True)
     )
-    out = (
-        keep_rows.select("node", "lbl", "lbl_bucket")
-        .unionByName(relabeled)
-        .localCheckpoint(eager=True)
+    # Every input is a checkpoint, so the overwrite reads nothing from
+    # ``path`` itself.
+    overwrite_partitions(
+        keep_rows.select("node", "lbl", "lbl_bucket").unionByName(relabeled),
+        path,
+        "lbl_bucket",
+        aff_buckets,
+        "node",
     )
-    (
-        out.sortWithinPartitions("lbl_bucket", "node")
-        .write.option("partitionOverwriteMode", "dynamic")
-        .partitionBy("lbl_bucket")
-        .mode("overwrite")
-        .parquet(path)
-    )
-    kept_buckets = {r[0] for r in out.select("lbl_bucket").distinct().collect()}
-    for r in aff_buckets.collect():
-        if r[0] not in kept_buckets:
-            shutil.rmtree(
-                os.path.join(path, f"lbl_bucket={r[0]}"), ignore_errors=True
-            )
     # Retired labels leave the sidecar; the relabeled survivors' (new
     # label, insert-time bucket) pairs enter it. keep_rows' labels are
     # unaffected and already recorded, and a new label can never
@@ -932,8 +904,8 @@ def sink_lake_cluster_labels_artifact_retract(
     that lost a victim must shrink or dissolve.
 
     Scale: locate = one narrow columnar pass; scope = sidecar lookup +
-    DPP-pruned bucket read; re-cluster = |affected clusters| signing +
-    BSP at cluster grain; rewrite = |affected buckets| dynamic
+    statically pruned bucket read; re-cluster = |affected clusters|
+    signing + BSP at cluster grain; rewrite = |affected buckets| dynamic
     overwrite. The lake-sized labeling is the write-once half this
     family always amortizes."""
     path = retracted_cluster_labels_artifact(spark, sf_dir, rebuild=True)

@@ -49,11 +49,13 @@ EXEMPT: set[tuple[str, str, str]] = {
     # aggregate whose action also materializes the iteration's lazy
     # checkpoint; only that scalar crosses to the driver.
     ("quty_server_spark/operators/graph.py", "pagerank_converged", "first"),
-    # Retraction cleanup of partitions a dynamic overwrite cannot
-    # empty: both collects pull DISTINCT partition-key values of the
-    # AFFECTED partition set — bounded by the artifact's partition
-    # count (metadata grain: <= 16 passage prefixes, <= IVF_K_MAX
-    # cells, <= LABEL_HOME_BUCKETS buckets), never row-scale.
+    # Retraction scoping: each verb makes ONE collect, of the DISTINCT
+    # partition-key values of the AFFECTED partition set, which then
+    # drives the static partition filter and the cleanup of partitions
+    # the dynamic overwrite left empty — bounded by the artifact's
+    # partition count (metadata grain: <= 16 passage prefixes,
+    # <= IVF_K_MAX cells, <= LABEL_HOME_BUCKETS buckets), never
+    # row-scale.
     ("quty_server_spark/operators/retract.py", "_retract_rows", "collect"),
     (
         "quty_server_spark/operators/retract.py",
@@ -61,8 +63,8 @@ EXEMPT: set[tuple[str, str, str]] = {
         "collect",
     ),
     # Trainer-shard compaction (same partition-scoped-rewrite device):
-    # both collects pull DISTINCT content-keyed shard ids of the
-    # affected/kept set — bounded by N_TRAIN_SHARDS (metadata grain:
+    # one collect of the DISTINCT content-keyed shard ids of the
+    # affected set — bounded by N_TRAIN_SHARDS (metadata grain:
     # 8 values), never row-scale.
     (
         "quty_server_spark/operators/pipeline.py",

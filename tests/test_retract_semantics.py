@@ -1,5 +1,5 @@
 """Retraction semantics the oracle summary verifies only in aggregate:
-physical behavior of the shared DELETE device (DPP-scoped rewrite,
+physical behavior of the shared DELETE device (partition-scoped rewrite,
 byte-identity of unaffected partitions, emptied-partition cleanup),
 probe equality of every nightly gate against a survivors-only rebuild,
 the poisoned-gate counterexample (the reason retraction must exist),
@@ -54,7 +54,14 @@ def test_retract_rows_scopes_preserves_and_cleans(spark, tmp_path):
     before = _file_md5s(path)
     affected = spark.createDataFrame([("a",), ("b",), ("d",)], "pfx string")
     victims = spark.createDataFrame([(3,), (13,), (23,)], "doc_id long")
+    # Job bound: schema inference, the ONE affected-partition collect
+    # (shuffle map + result), the victim broadcast, the survivor
+    # checkpoint and the overwrite. A second affected computation or a
+    # separate written-partition collect would exceed it.
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs0 = dag.numTotalJobs()
     R._retract_rows(spark, path, "pfx", affected, victims, "doc_id", "doc_id")
+    assert dag.numTotalJobs() - jobs0 <= 6
     got = sorted(
         (r.doc_id, r.pfx) for r in spark.read.parquet(path).collect()
     )

@@ -1442,11 +1442,14 @@ def test_incremental_snapshot_zero_lake_compute(spark):
 
 
 def test_retract_read_prunes_to_affected_partitions(spark, tmp_path):
-    # The retraction's artifact read must carry a dynamic-pruning
-    # expression on the partition column: at 100 TB the passage / IVF
+    # The retraction's artifact read must be pruned to the affected
+    # partitions on the partition column: at 100 TB the passage / IVF
     # artifacts are lake-sized and a takedown may only read the
     # directories its victims' windows / cells name, never the lake.
-    from pyspark.sql import functions as F
+    # The affected keys are a static list, so the pruning is a plain
+    # partition filter: the plan must carry the IN list, and the
+    # executed scan must have opened exactly the 2 affected prefixes.
+    import re
 
     from quty_server_spark.operators import retract
 
@@ -1455,19 +1458,26 @@ def test_retract_read_prunes_to_affected_partitions(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, pfx string").write.partitionBy(
         "pfx"
     ).parquet(path)
-    affected = (
-        spark.createDataFrame([("a",), ("3",)], "pfx string")
-        .distinct()
-        .filter(F.col("pfx") >= "0")
-    )
-    df = retract._retract_touched_rows(spark, path, "pfx", affected)
-    plan = df._jdf.queryExecution().explainString(
+    schema = spark.read.parquet(path).schema
+    df = retract._retract_touched_rows(spark, path, "pfx", ["a", "3"], schema)
+    qe = df._jdf.queryExecution()
+    plan = qe.explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
         )
     )
-    assert "dynamicpruningexpression" in plan
-    assert "PartitionFilters" in plan
+    pfilters = r"PartitionFilters: \[[^\]]*pfx#\d+ IN \(a,3\)"
+    assert re.search(pfilters, plan), plan
+    got = df.collect()
+    assert {r.pfx for r in got} == {"a", "3"}
+    assert len(got) == sum(1 for _, p in rows if p in ("a", "3"))
+    it = qe.executedPlan().collectLeaves().iterator()
+    scans = []
+    while it.hasNext():
+        node = it.next()
+        if node.nodeName().startswith("Scan parquet"):
+            scans.append(node.metrics().get("numPartitions").get().value())
+    assert scans == [2]
 
 
 # --- round-14 late additions -----------------------------------------------
