@@ -19,7 +19,6 @@ UDFs — so whole-stage codegen applies end-to-end.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -35,7 +34,11 @@ from quty_server_spark.operators._helpers import (
     load_table,
 )
 from quty_server_spark.plans.registry import registry
-from quty_server_spark.session import session_tmp_dir
+from quty_server_spark.session import (  # noqa: F401 (re-exported)
+    fresh_tmp_dir,
+    memo,
+    session_tmp_dir,
+)
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -666,9 +669,9 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is a recursive CTE computing min reachable label. This is the
     keeper-assignment step a 100 TB dedup pipeline runs after pair
     mining; the driver only coordinates supersteps, all data movement is
-    shuffle-side. The label table is memoized per (session, sf_dir) —
-    see :func:`simhash_component_labels` — so the stats/keeper queries
-    that consume the same labels don't re-run the BSP loop."""
+    shuffle-side. The label table is shared with the stats/keeper
+    queries through :func:`simhash_component_labels`, so they don't
+    re-run the BSP loop."""
     labels = simhash_component_labels(spark, sf_dir)
     return labels.select(
         F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id")
@@ -839,29 +842,21 @@ def min_label_components(
 
 
 def simhash_component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SimHash near-dup component label table ``(node, lbl)``,
-    memoized per (session, sf_dir) — the single most expensive job in
-    the repo (banded pair mining + the BSP loop), shared by
+    """The SimHash near-dup component label table ``(node, lbl)`` — the
+    single most expensive job in the repo (banded pair mining + the BSP
+    loop), shared through the session :func:`memo` by
     ``dedup_cluster``, ``dedup_keep_canonical`` and
     ``dedup_cluster_stats`` so a composed pipeline (or the headline
-    bench) labels the corpus ONCE instead of once per consumer. Same
-    memoization device as ``_quty_bloom_child``
-    (relational.py): state rides on the SparkSession object, so a fresh
-    driver session rebuilds from scratch (correctness never depends on
-    the cache) while any session that asks twice — bench loops,
-    corpus_qa_report, the stats query after the cluster query — pays
-    zero. The returned frame is eagerly localCheckpointed: consumers get
-    materialized executor-local blocks, not a lineage that would re-run
-    the supersteps; on executor loss the entry is simply rebuilt (the
-    BSP loop's own reliable-checkpoint cadence bounds that replay). The
-    cache is keyed by sf_dir, holds one ~16-byte/row label table per
-    dataset, and is O(near-dup nodes) — negligible next to the corpus."""
-    cache = getattr(spark, "_quty_cluster_labels", None)
-    if cache is None:
-        cache = {}
-        spark._quty_cluster_labels = cache
-    labels = cache.get(sf_dir)
-    if labels is None:
+    bench) labels the corpus ONCE instead of once per consumer; any
+    session that asks twice — bench loops, corpus_qa_report, the stats
+    query after the cluster query — pays zero. The returned frame is
+    eagerly localCheckpointed: consumers get materialized
+    executor-local blocks, not a lineage that would re-run the
+    supersteps; on executor loss the entry is simply rebuilt (the BSP
+    loop's own reliable-checkpoint cadence bounds that replay). One
+    entry per sf_dir holds a ~16-byte/row label table, O(near-dup
+    nodes) — negligible next to the corpus."""
+    def build() -> DataFrame:
         # Round 10: mine and label at SIGNATURE grain, then expand back
         # to documents — the standard production pre-collapse (an exact
         # 48-bit-signature group is a hamming-0 clique; boilerplate-heavy
@@ -931,9 +926,9 @@ def simhash_component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Materialized pin: the cached handle is independent of the
         # loop's temporaries and of the lazy sigs checkpoint.
-        labels = labels.localCheckpoint(eager=True)
-        cache[sf_dir] = labels
-    return labels
+        return labels.localCheckpoint(eager=True)
+
+    return memo(spark, "cluster_labels", sf_dir, build)
 
 
 def simhash_bands(sigs: DataFrame) -> DataFrame:
@@ -1746,17 +1741,9 @@ def lake_minhash_artifact(
     and sorted by ``sig`` within files, so a point probe prunes
     directories at planning time and row groups via min/max stats —
     the same layout contract as the SimHash artifact, pinned in
-    tests/test_scale_plans.py. Memoized per (session, sf_dir); path
-    keyed by the Spark application id (session_tmp_dir) so concurrent
-    sessions never clobber each other's files."""
-    cache = getattr(spark, "_quty_lake_minhash_artifact", None)
-    if cache is None:
-        cache = {}
-        spark._quty_lake_minhash_artifact = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_lake_minhash", sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+    tests/test_scale_plans.py."""
+    def build() -> str:
+        path = fresh_tmp_dir(spark, "quty_lake_minhash", sf_dir)
         sh_lake = doc_shingles(spark, sf_dir).filter(
             F.col("doc_id") % 10 != 0
         ).localCheckpoint(eager=False)
@@ -1767,8 +1754,9 @@ def lake_minhash_artifact(
         ).sortWithinPartitions("band_id", "sig").write.partitionBy(
             "band_id"
         ).parquet(path)
-        cache[sf_dir] = path
-    return path
+        return path
+
+    return memo(spark, "lake_minhash_artifact", sf_dir, build, rebuild)
 
 
 # Per-band summary of the lake MinHash-band artifact's full contract
@@ -1908,25 +1896,11 @@ def lake_signature_artifact(
     gate's join key prefix: a probe that only needs band 2 (e.g. a
     debugging re-check) prunes 3/4 of the files at planning time, and
     the nightly append of newly-admitted docs goes to 4 directories
-    with no read-modify-write of existing files. Memoized per
-    (session, sf_dir) like ``simhash_component_labels`` so a composed
-    pipeline (writer query, gate query, bench loop) writes once per
-    session; a fresh driver session rebuilds from scratch, so
-    correctness never depends on leftover /tmp state (the build rmtree's
-    any stale directory first). The path is keyed by the Spark
-    application id (session_tmp_dir) so a concurrent session's forced
-    rebuild can never rmtree files under this session's memoized
-    reader (r10 ADVICE)."""
-    cache = getattr(spark, "_quty_lake_sig_artifact", None)
-    if cache is None:
-        cache = {}
-        spark._quty_lake_sig_artifact = cache
-    key = (sf_dir, staged)
-    path = cache.get(key)
-    if path is None or rebuild:
+    with no read-modify-write of existing files. A composed pipeline
+    (writer query, gate query, bench loop) writes it once per session."""
+    def build() -> str:
         kind = "quty_lake_sig_stg" if staged else "quty_lake_sig"
-        path = session_tmp_dir(spark, kind, sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+        path = fresh_tmp_dir(spark, kind, sf_dir)
         lake = simhash_bands(simhash_sigs(spark, sf_dir, staged=staged)).filter(
             F.col("doc_id") % 10 != 0
         )
@@ -1940,8 +1914,9 @@ def lake_signature_artifact(
         lake.sortWithinPartitions("band_id", "band_val").write.partitionBy(
             "band_id"
         ).parquet(path)
-        cache[key] = path
-    return path
+        return path
+
+    return memo(spark, "lake_sig_artifact", (sf_dir, staged), build, rebuild)
 
 
 # Per-band summary of the banded lake-signature artifact. Shared
@@ -2123,14 +2098,8 @@ def appended_signature_artifact(
     by the registered append sink and the gate-equality tests. The
     resulting artifact's content equals a fresh full-lake build's, by
     construction verified through the shared oracle SQL."""
-    cache = getattr(spark, "_quty_lake_sig_app", None)
-    if cache is None:
-        cache = {}
-        spark._quty_lake_sig_app = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_lake_sig_app", sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+    def build() -> str:
+        path = fresh_tmp_dir(spark, "quty_lake_sig_app", sf_dir)
         base = simhash_bands(simhash_sigs(spark, sf_dir)).filter(
             (F.col("doc_id") % 10 != 0)
             & (F.col("doc_id") % 10 != APPEND_BATCH_MOD)
@@ -2141,8 +2110,9 @@ def appended_signature_artifact(
         append_to_band_artifact(
             admitted_simhash_bands(spark, sf_dir), path, "band_val"
         )
-        cache[sf_dir] = path
-    return path
+        return path
+
+    return memo(spark, "lake_sig_app", sf_dir, build, rebuild)
 
 
 def appended_minhash_artifact(
@@ -2156,14 +2126,8 @@ def appended_minhash_artifact(
     too (paired with the convention-free
     :func:`lake_shingles_for_verify`, this closes the r11 ADVICE
     false-negative finding end to end)."""
-    cache = getattr(spark, "_quty_lake_minhash_app", None)
-    if cache is None:
-        cache = {}
-        spark._quty_lake_minhash_app = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_lake_minhash_app", sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+    def build() -> str:
+        path = fresh_tmp_dir(spark, "quty_lake_minhash_app", sf_dir)
         sh_base = doc_shingles(spark, sf_dir).filter(
             (F.col("doc_id") % 10 != 0)
             & (F.col("doc_id") % 10 != APPEND_BATCH_MOD)
@@ -2178,8 +2142,9 @@ def appended_minhash_artifact(
         append_to_band_artifact(
             admitted_minhash_bands(spark, sf_dir), path, "sig"
         )
-        cache[sf_dir] = path
-    return path
+        return path
+
+    return memo(spark, "lake_minhash_app", sf_dir, build, rebuild)
 
 
 @registry.query(
@@ -2298,16 +2263,9 @@ def lake_cluster_labels_artifact(
     symmetric job that must NOT run nightly, so it lives here, in the
     amortized half. Sorted by ``node`` so the nightly join's point
     lookups prune row groups via min/max stats."""
-    cache = getattr(spark, "_quty_lake_cluster_labels", None)
-    if cache is None:
-        cache = {}
-        spark._quty_lake_cluster_labels = cache
-    key = (sf_dir, staged)
-    path = cache.get(key)
-    if path is None or rebuild:
+    def build() -> str:
         kind = "quty_lake_clabels_stg" if staged else "quty_lake_clabels"
-        path = session_tmp_dir(spark, kind, sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+        path = fresh_tmp_dir(spark, kind, sf_dir)
         sigs = (
             simhash_sigs(spark, sf_dir, staged=staged)
             .filter(F.col("doc_id") % 10 != 0)
@@ -2315,8 +2273,9 @@ def lake_cluster_labels_artifact(
         )
         labels = _labels_from_sigs(spark, sigs)
         labels.sortWithinPartitions("node").write.parquet(path)
-        cache[key] = path
-    return path
+        return path
+
+    return memo(spark, "lake_cluster_labels", (sf_dir, staged), build, rebuild)
 
 
 @registry.query(
@@ -2464,14 +2423,11 @@ def _incremental_cluster_labels(
     labels_path: str | None = None,
 ) -> DataFrame:
     """The contracted-graph min-label BSP result ``(node, lbl)``,
-    memoized per (session, sf_dir) — shared by
-    :func:`dedup_cluster_incremental` (reads the shard-node side) and
-    :func:`dedup_cluster_relabel_queue` (reads the lake-label-node
-    side), so a composed nightly run (or the driver head, which runs
-    both) pays the shard signing + gate join + BSP once, not twice
-    (r12 review). Same memo device as
-    :func:`simhash_component_labels`; a fresh session rebuilds, so
-    correctness never depends on the cache."""
+    shared by :func:`dedup_cluster_incremental` (reads the shard-node
+    side) and :func:`dedup_cluster_relabel_queue` (reads the
+    lake-label-node side), so a composed nightly run (or the driver
+    head, which runs both) pays the shard signing + gate join + BSP
+    once, not twice (r12 review)."""
     return _incremental_cluster_state(
         spark, sf_dir, staged=staged, labels_path=labels_path
     )[0]
@@ -2490,25 +2446,22 @@ def _incremental_cluster_state(
     never stored); it is shard-bounded by construction (a subset of the
     gate join's lake side). Both frames are checkpointed under one memo
     so every consumer pays the signing + gate + BSP once."""
-    cache = getattr(spark, "_quty_incremental_cluster_labels", None)
-    if cache is None:
-        cache = {}
-        spark._quty_incremental_cluster_labels = cache
-    key = (sf_dir, staged, labels_path)
-    state = cache.get(key)
-    if state is None:
+    def build() -> tuple[DataFrame, DataFrame]:
         pairs, singles = _incremental_cluster_graph(
             spark, sf_dir, staged=staged, labels_path=labels_path
         )
         labels, _ = min_label_components(spark, pairs)
-        state = (
+        return (
             labels.localCheckpoint(eager=True),
             # Lazy: only the maintenance APPLY reads the singles frame —
             # the assignment/queue consumers must not pay its action.
             singles.localCheckpoint(eager=False),
         )
-        cache[key] = state
-    return state
+
+    return memo(
+        spark, "incremental_cluster_labels", (sf_dir, staged, labels_path),
+        build,
+    )
 
 
 def _incremental_cluster_pairs(
@@ -2902,16 +2855,9 @@ def maintained_cluster_labels_artifact(
     clusters, append tonight's new labels). Content equals a fresh
     full-corpus recompute's — the contract the relabel sink's oracle
     verifies end to end."""
-    cache = getattr(spark, "_quty_maint_clabels", None)
-    if cache is None:
-        cache = {}
-        spark._quty_maint_clabels = cache
-    key = (sf_dir, staged)
-    path = cache.get(key)
-    if path is None or rebuild:
+    def build() -> str:
         kind = "quty_maint_clabels_stg" if staged else "quty_maint_clabels"
-        path = session_tmp_dir(spark, kind, sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+        path = fresh_tmp_dir(spark, kind, sf_dir)
         _write_home_bucket_layout(
             spark.read.parquet(
                 lake_cluster_labels_artifact(spark, sf_dir, staged=staged)
@@ -2919,8 +2865,9 @@ def maintained_cluster_labels_artifact(
             path,
         )
         apply_cluster_label_maintenance(spark, sf_dir, path, staged=staged)
-        cache[key] = path
-    return path
+        return path
+
+    return memo(spark, "maint_clabels", (sf_dir, staged), build, rebuild)
 
 
 def _write_home_bucket_layout(labels: DataFrame, path: str) -> None:
@@ -3412,14 +3359,8 @@ def lake_passage_artifact(
     night's shard probes digest membership instead of re-windowing the
     lake (reference analog: the r12 corpus-level ops re-derive all
     windows per run — fine for a report, wrong as a nightly gate)."""
-    cache = getattr(spark, "_quty_lake_passages", None)
-    if cache is None:
-        cache = {}
-        spark._quty_lake_passages = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_lake_passages", sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+    def build() -> str:
+        path = fresh_tmp_dir(spark, "quty_lake_passages", sf_dir)
         d = load_table(spark, sf_dir, "documents").filter(
             F.col("doc_id") % 10 != 0
         )
@@ -3427,8 +3368,9 @@ def lake_passage_artifact(
         w.sortWithinPartitions("pfx", "passage_md5").write.partitionBy(
             "pfx"
         ).parquet(path)
-        cache[sf_dir] = path
-    return path
+        return path
+
+    return memo(spark, "lake_passages", sf_dir, build, rebuild)
 
 
 # Per-prefix summary of the lake passage artifact — shared byte-for-byte
@@ -3475,14 +3417,8 @@ def appended_passage_artifact(
     with the batch's window rows APPENDED — computed from the batch
     alone, never re-windowing the lake; the passage twin of
     :func:`appended_signature_artifact`."""
-    cache = getattr(spark, "_quty_lake_passages_app", None)
-    if cache is None:
-        cache = {}
-        spark._quty_lake_passages_app = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_lake_passages_app", sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+    def build() -> str:
+        path = fresh_tmp_dir(spark, "quty_lake_passages_app", sf_dir)
         docs = load_table(spark, sf_dir, "documents")
         base = _passage_windows(
             docs.filter(
@@ -3499,8 +3435,9 @@ def appended_passage_artifact(
         batch.sortWithinPartitions("pfx", "passage_md5").write.partitionBy(
             "pfx"
         ).mode("append").parquet(path)
-        cache[sf_dir] = path
-    return path
+        return path
+
+    return memo(spark, "lake_passages_app", sf_dir, build, rebuild)
 
 
 @registry.query(

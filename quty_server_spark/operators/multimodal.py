@@ -38,6 +38,7 @@ from pyspark.sql.types import (
 
 from quty_server_spark.operators._helpers import load_table
 from quty_server_spark.plans.registry import registry
+from quty_server_spark.session import fresh_tmp_dir, memo
 
 MODALITIES = ["image", "audio", "video"]
 
@@ -753,20 +754,9 @@ def media_signature_artifact(
     a 100 TB media lake decodes and signs ONCE, and each night's gate
     joins the shard's fresh signatures against this artifact instead of
     re-decoding the lake (for real media the signing pass is the
-    expensive decode — amortizing it is the whole artifact story).
-    Memoized per (session, sf_dir); path keyed by application id."""
-    import shutil
-
-    from quty_server_spark.session import session_tmp_dir
-
-    cache = getattr(spark, "_quty_media_sig_artifact", None)
-    if cache is None:
-        cache = {}
-        spark._quty_media_sig_artifact = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_media_sig", sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+    expensive decode — amortizing it is the whole artifact story)."""
+    def build() -> str:
+        path = fresh_tmp_dir(spark, "quty_media_sig", sf_dir)
         lake_uni = percep_media_universe(spark, sf_dir).filter(
             F.col("doc_id") % 10 != 0
         )
@@ -774,8 +764,9 @@ def media_signature_artifact(
         bands.sortWithinPartitions("band_id", "band_val").write.partitionBy(
             "band_id"
         ).parquet(path)
-        cache[sf_dir] = path
-    return path
+        return path
+
+    return memo(spark, "media_sig_artifact", sf_dir, build, rebuild)
 
 
 def appended_media_signature_artifact(
@@ -792,18 +783,8 @@ def appended_media_signature_artifact(
         append_to_band_artifact,
     )
 
-    import shutil
-
-    from quty_server_spark.session import session_tmp_dir
-
-    cache = getattr(spark, "_quty_media_sig_app", None)
-    if cache is None:
-        cache = {}
-        spark._quty_media_sig_app = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_media_sig_app", sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+    def build() -> str:
+        path = fresh_tmp_dir(spark, "quty_media_sig_app", sf_dir)
         uni = percep_media_universe(spark, sf_dir)
         base_uni = uni.filter(
             (F.col("doc_id") % 10 != 0)
@@ -817,8 +798,9 @@ def appended_media_signature_artifact(
         append_to_band_artifact(
             media_sig_bands(spark, sf_dir, docs=batch_uni), path, "band_val"
         )
-        cache[sf_dir] = path
-    return path
+        return path
+
+    return memo(spark, "media_sig_app", sf_dir, build, rebuild)
 
 
 def _media_sig_summary_oracle() -> str:
@@ -1000,19 +982,15 @@ def sink_media_signature_artifact_retract(
     pay one broadcast anti-join until scheduled compaction folds it —
     for media this is the difference between a takedown that re-decodes
     nothing and one that re-signs a lake."""
-    import shutil
-
     from quty_server_spark.operators.retract import (
         RETRACT_MOD,
         _copy_artifact,
         _write_tombstones,
         read_artifact_live,
     )
-    from quty_server_spark.session import session_tmp_dir
 
     src_path = media_signature_artifact(spark, sf_dir)
-    priv = session_tmp_dir(spark, "quty_media_sig_rt", sf_dir)
-    shutil.rmtree(priv, ignore_errors=True)
+    priv = fresh_tmp_dir(spark, "quty_media_sig_rt", sf_dir)
     _copy_artifact(src_path, priv)
     victims = percep_media_universe(spark, sf_dir).filter(
         F.col("doc_id") % 10 == RETRACT_MOD
@@ -1050,19 +1028,15 @@ def sink_media_signature_artifact_retract_compacted(
     them with the partition-pruned dynamic overwrite; for media the stake is
     the same as the gate's — nothing is ever re-decoded, the takedown's
     cost follows the victims, not the lake."""
-    import shutil
-
     from quty_server_spark.operators.retract import (
         RETRACT_MOD,
         _copy_artifact,
         _write_tombstones,
         compact_tombstones,
     )
-    from quty_server_spark.session import session_tmp_dir
 
     src_path = media_signature_artifact(spark, sf_dir)
-    priv = session_tmp_dir(spark, "quty_media_sig_rtc", sf_dir)
-    shutil.rmtree(priv, ignore_errors=True)
+    priv = fresh_tmp_dir(spark, "quty_media_sig_rtc", sf_dir)
     _copy_artifact(src_path, priv)
     victims = percep_media_universe(spark, sf_dir).filter(
         F.col("doc_id") % 10 == RETRACT_MOD

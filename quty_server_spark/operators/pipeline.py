@@ -22,6 +22,7 @@ from quty_server_spark.operators._helpers import (
     overwrite_partitions,
 )
 from quty_server_spark.plans.registry import registry
+from quty_server_spark.session import fresh_tmp_dir, memo, session_tmp_dir
 
 # Regexes shared by the Spark path and the DuckDB twin (Java regex and
 # RE2 agree on this subset: classes, quantifiers, no backrefs).
@@ -1428,12 +1429,7 @@ def sink_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     here as an n_docs outlier — this audit is the check a training run
     gates on before it starts burning accelerator hours.
     """
-    import shutil
-
-    from quty_server_spark.session import session_tmp_dir
-
-    out = session_tmp_dir(spark, "quty_train_shards", sf_dir)
-    shutil.rmtree(out, ignore_errors=True)
+    out = fresh_tmp_dir(spark, "quty_train_shards", sf_dir)
     _write_training_shards(corpus_training_snapshot(spark, sf_dir), out)
     return _shard_summary(spark.read.parquet(out))
 
@@ -1491,23 +1487,14 @@ def appended_training_shards(
     additions (:func:`corpus_training_snapshot_incremental`'s output)
     APPENDED: a partitioned parquet ``mode("append")``, so new files
     land inside the standing ``shard=N`` directories with ZERO
-    read-modify-write of existing files. Memoized per (session,
-    sf_dir), shared by the registered append sink and the
-    append ≡ rebuild / byte-identity tests."""
-    import shutil
-
-    from quty_server_spark.session import session_tmp_dir
-
-    cache = getattr(spark, "_quty_train_shards_app", None)
-    if cache is None:
-        cache = {}
-        spark._quty_train_shards_app = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
+    read-modify-write of existing files. Shared by the registered
+    append sink and the append ≡ rebuild / byte-identity tests."""
+    def build() -> str:
         path = session_tmp_dir(spark, "quty_train_shards_app", sf_dir)
         _build_appended_training_shards(spark, sf_dir, path)
-        cache[sf_dir] = path
-    return path
+        return path
+
+    return memo(spark, "train_shards_app", sf_dir, build, rebuild)
 
 
 def _build_appended_training_shards(
@@ -1690,13 +1677,9 @@ def sink_training_shards_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     0: a document admitted by the snapshot's whitespace-token gates but
     holding zero [a-z] words (no BPE symbols) stays in its shard with
     an explicit zero, on both engines."""
-    import shutil
-
     from quty_server_spark.operators.textops import text_bpe_encode_vocab
-    from quty_server_spark.session import session_tmp_dir
 
-    out = session_tmp_dir(spark, "quty_train_shards_bpe", sf_dir)
-    shutil.rmtree(out, ignore_errors=True)
+    out = fresh_tmp_dir(spark, "quty_train_shards_bpe", sf_dir)
     snap = corpus_training_snapshot(spark, sf_dir)
     bpe = text_bpe_encode_vocab(spark, sf_dir)
     snap_bpe = snap.join(bpe, "doc_id", "left").withColumn(
@@ -1812,8 +1795,6 @@ def sink_training_shards_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     staging build's lake-scoped artifacts are DIFFERENT memo families,
     so the fork is race-free; rows are unchanged (gate-verified)."""
     from concurrent.futures import ThreadPoolExecutor
-
-    from quty_server_spark.session import session_tmp_dir
 
     path = session_tmp_dir(spark, "quty_train_shards_cmp", sf_dir)
     with ThreadPoolExecutor(max_workers=1) as pool:

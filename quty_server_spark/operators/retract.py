@@ -100,7 +100,7 @@ from quty_server_spark.operators.similarity import (
     SQL_IVF_CENT,
 )
 from quty_server_spark.plans.registry import registry
-from quty_server_spark.session import session_tmp_dir
+from quty_server_spark.session import fresh_tmp_dir, memo, session_tmp_dir
 
 # The deterministic victim set: lake docs / vectors with id % 10 == 3.
 # Disjoint from tonight's shard (% 10 == 0) and yesterday's append batch
@@ -231,8 +231,7 @@ def retracted_artifact_paths(
     post: "callable | None" = None,
 ) -> dict[str, str]:
     """Private copies of the four standing artifacts with the victim
-    set physically retracted from each — memoized per (session,
-    sf_dir) like every artifact builder.
+    set physically retracted from each.
 
     ``post`` (r17 continuation, guide §2.6): an optional
     ``(family, frame) -> None`` callback, ``frame`` being the family's
@@ -258,12 +257,11 @@ def retracted_artifact_paths(
     scheduling overlaps); at cluster scale the same structure holds:
     four independent partition-scoped rewrite jobs back-fill each
     other's tails under FIFO scheduling."""
-    cache = getattr(spark, "_quty_retract_artifacts", None)
-    if cache is None:
-        cache = {}
-        spark._quty_retract_artifacts = cache
-    paths = cache.get(sf_dir)
-    if paths is None or rebuild:
+    built = False
+
+    def build() -> dict[str, str]:
+        nonlocal built
+        built = True
         from concurrent.futures import ThreadPoolExecutor
 
         vic = _doc_victims(spark, sf_dir).localCheckpoint(eager=True)
@@ -319,9 +317,10 @@ def retracted_artifact_paths(
 
         with ThreadPoolExecutor(max_workers=4) as pool:
             futs = {k: pool.submit(_run, k) for k in _RETRACT_FAMILY_ORDER}
-            paths = {k: f.result() for k, f in futs.items()}
-        cache[sf_dir] = paths
-    elif post is not None:
+            return {k: f.result() for k, f in futs.items()}
+
+    paths = memo(spark, "retract_artifacts", sf_dir, build, rebuild)
+    if post is not None and not built:
         for fam, p in paths.items():
             post(fam, spark.read.parquet(p))
     return paths
@@ -594,13 +593,9 @@ def tombstoned_artifact_paths(
 ) -> dict[str, str]:
     """Private copies of the four standing artifacts with the victim
     set TOMBSTONED (sidecar only — every data file byte-identical to
-    the base build's). Memoized per (session, sf_dir)."""
-    cache = getattr(spark, "_quty_tombstone_artifacts", None)
-    if cache is None:
-        cache = {}
-        spark._quty_tombstone_artifacts = cache
-    paths = cache.get(sf_dir)
-    if paths is None or rebuild:
+    the base build's)."""
+
+    def build() -> dict[str, str]:
         vic = _doc_victims(spark, sf_dir).localCheckpoint(eager=True)
         vvic = (
             _corpus(spark, sf_dir)
@@ -615,15 +610,16 @@ def tombstoned_artifact_paths(
             "ivf": ivf_postings_artifact,
         }
         paths = {}
-        for fam, build in builders.items():
+        for fam, base in builders.items():
             p = session_tmp_dir(spark, f"quty_tomb_{fam}", sf_dir)
-            _copy_artifact(build(spark, sf_dir), p)
+            _copy_artifact(base(spark, sf_dir), p)
             _write_tombstones(
                 spark, p, vvic if fam == "ivf" else vic
             )
             paths[fam] = p
-        cache[sf_dir] = paths
-    return paths
+        return paths
+
+    return memo(spark, "tombstone_artifacts", sf_dir, build, rebuild)
 
 
 @registry.query(
@@ -800,14 +796,8 @@ def retracted_cluster_labels_artifact(
     through one retraction night. Content equals a fresh lake-only
     labeling of the survivors — the contract the retract sink's oracle
     verifies end to end."""
-    cache = getattr(spark, "_quty_retract_clabels", None)
-    if cache is None:
-        cache = {}
-        spark._quty_retract_clabels = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_retract_clabels", sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+    def build() -> str:
+        path = fresh_tmp_dir(spark, "quty_retract_clabels", sf_dir)
         docs = retract_staged_documents(spark, sf_dir)
         sigs = (
             simhash_sigs_docs(docs)
@@ -819,8 +809,9 @@ def retracted_cluster_labels_artifact(
             F.col("doc_id") % 10 == RETRACT_MOD
         ).select("doc_id").localCheckpoint(eager=True)
         apply_cluster_label_retraction(spark, path, victims, docs)
-        cache[sf_dir] = path
-    return path
+        return path
+
+    return memo(spark, "retract_clabels", sf_dir, build, rebuild)
 
 
 SQL_DOCS_RSTAGED = (

@@ -18,7 +18,7 @@ from pyspark.sql.functions import broadcast
 from quty_server_spark.functions.hashing import hash28, sql_hash28
 from quty_server_spark.operators._helpers import load_table
 from quty_server_spark.plans.registry import registry
-from quty_server_spark.session import session_tmp_dir
+from quty_server_spark.session import memo, session_tmp_dir
 
 STOPWORDS = {
     "en": ["the", "a", "of", "and", "is"],
@@ -835,10 +835,9 @@ def _bpe_train_state(
     within one action tree) and the N per-round 1-row argmax frames.
     One loop shared by the merge-table, compression-curve, encoder,
     packer, and budget-sampler queries — the Spark twin of
-    :func:`_bpe_cte_chain` — and MEMOIZED per (session, sf_dir), the
-    same one-pass-feeds-every-consumer convention as the component
-    label memo: one training run per session serves all five
-    registered consumers (bench and the A/B harness clear the memo
+    :func:`_bpe_cte_chain` — held in the session :func:`memo`: one
+    training run per session serves all five registered consumers
+    (bench and the A/B harness clear the memo
     before timing text_bpe_train_n, so the trainer's number stays the
     cold training cost and the consumers' numbers are their marginal
     cost — the dedup_cluster / corpus_training_snapshot convention).
@@ -850,45 +849,42 @@ def _bpe_train_state(
     argmax row to a sink) instead of unioning N frames at the close —
     the r15 judge's standing note, recorded here so whoever grows
     BPE_TRAIN_MERGES sees it."""
-    cache = getattr(spark, "_quty_bpe_state", None)
-    if cache is None:
-        cache = {}
-        spark._quty_bpe_state = cache
-    hit = cache.get(sf_dir)
-    if hit is not None:
-        return hit
-    d = load_table(spark, sf_dir, "documents")
-    words = (
-        d.select(
-            F.explode(F.split(F.lower(F.col("text")), "[^a-z]+")).alias("w")
+    def build() -> tuple[list[DataFrame], list[DataFrame]]:
+        d = load_table(spark, sf_dir, "documents")
+        words = (
+            d.select(
+                F.explode(
+                    F.split(F.lower(F.col("text")), "[^a-z]+")
+                ).alias("w")
+            )
+            .filter(F.col("w") != "")
+            .groupBy("w")
+            .agg(F.count("*").alias("cnt"))
         )
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count("*").alias("cnt"))
-    )
-    vocab = words.select(
-        F.concat(
-            F.lit("|"), F.regexp_replace("w", "(.)", r"$1|")
-        ).alias("s"),
-        "cnt",
-    ).localCheckpoint(eager=False)
-    vocabs, tops = [vocab], []
-    for _k in range(1, BPE_TRAIN_MERGES + 1):
-        top1 = (
-            _bpe_sym_pairs(vocab)
-            .orderBy(F.desc("c"), "l", "r")
-            .limit(1)
-            .localCheckpoint(eager=False)
-        )
-        tops.append(top1)
-        vocab = (
-            vocab.crossJoin(F.broadcast(top1.select("l", "r")))
-            .select(F.expr(_SQL_BPE_APPLY).alias("s"), "cnt")
-            .localCheckpoint(eager=False)
-        )
-        vocabs.append(vocab)
-    cache[sf_dir] = (vocabs, tops)
-    return vocabs, tops
+        vocab = words.select(
+            F.concat(
+                F.lit("|"), F.regexp_replace("w", "(.)", r"$1|")
+            ).alias("s"),
+            "cnt",
+        ).localCheckpoint(eager=False)
+        vocabs, tops = [vocab], []
+        for _k in range(1, BPE_TRAIN_MERGES + 1):
+            top1 = (
+                _bpe_sym_pairs(vocab)
+                .orderBy(F.desc("c"), "l", "r")
+                .limit(1)
+                .localCheckpoint(eager=False)
+            )
+            tops.append(top1)
+            vocab = (
+                vocab.crossJoin(F.broadcast(top1.select("l", "r")))
+                .select(F.expr(_SQL_BPE_APPLY).alias("s"), "cnt")
+                .localCheckpoint(eager=False)
+            )
+            vocabs.append(vocab)
+        return vocabs, tops
+
+    return memo(spark, "bpe_state", sf_dir, build)
 
 
 def _bpe_compression_oracle(n: int = BPE_TRAIN_MERGES) -> str:
@@ -1143,21 +1139,13 @@ def bpe_merges_artifact(
     lake object, decoupled from the training session: consumers
     (:func:`text_bpe_encode_artifact`, a production loader) read N
     merge rows from parquet instead of holding N per-round frames on a
-    live trainer's driver. Memoized per (session, sf_dir) with the
-    standard rebuild escape; keyed by the Spark application id
-    (session_tmp_dir) so a concurrent session's forced rebuild never
-    rmtrees under this session's memoized readers (the r10 ADVICE
-    convention every artifact family follows)."""
-    cache = getattr(spark, "_quty_bpe_merges_artifact", None)
-    if cache is None:
-        cache = {}
-        spark._quty_bpe_merges_artifact = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
+    live trainer's driver."""
+    def build() -> str:
         path = session_tmp_dir(spark, "quty_bpe_merges", sf_dir)
         _write_bpe_merges(spark, sf_dir, path)
-        cache[sf_dir] = path
-    return path
+        return path
+
+    return memo(spark, "bpe_merges_artifact", sf_dir, build, rebuild)
 
 
 @registry.query("sink_bpe_merges_artifact", oracle=_bpe_train_oracle())

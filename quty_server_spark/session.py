@@ -18,8 +18,11 @@ from __future__ import annotations
 
 import os
 import tempfile
+from typing import Callable, Hashable, TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 # Confs that are runtime-settable and required/valuable regardless of who
 # built the SparkSession.
@@ -157,17 +160,18 @@ def _prune_stale_siblings(kind_root: str, own_app_dir: str) -> None:
 
 def session_tmp_dir(spark: SparkSession, kind: str, sf_dir: str) -> str:
     """Session-scoped scratch directory for on-disk artifacts:
-    ``$TMPDIR/<kind>/<spark application id>/<sf basename>``.
+    ``$TMPDIR/<kind>/<spark application id>/<sf basename>``. Returns the
+    path without touching its contents, so callers (tests, examples) can
+    locate what a build left there; a build empties it first
+    (:func:`fresh_tmp_dir`).
 
     The application id isolates concurrent sessions (e.g. a bench loop
     and an oracle gate on the same sf_dir): without it, a second
-    session's forced rebuild ``rmtree``'s a predictable shared path and
-    can delete parquet row groups out from under the first session's
-    memoized reader mid-scan (r10 ADVICE). Artifact builders that
-    memoize per (session, sf_dir) pair naturally with this — the path
-    is unique per session, the memo is per session, and a fresh driver
-    session always rebuilds, so correctness never depends on leftover
-    /tmp state.
+    session's forced rebuild clears a predictable shared path and can
+    delete parquet row groups out from under the first session's
+    memoized reader mid-scan (r10 ADVICE). The path is unique per
+    session like the :func:`memo` state that holds it, so correctness
+    never depends on leftover /tmp state.
 
     Reclamation (r11 ADVICE): the per-session app-id dir is registered
     for atexit removal (covers every normal exit — the accumulation
@@ -197,3 +201,54 @@ def session_tmp_dir(spark: SparkSession, kind: str, sf_dir: str) -> str:
         app_dir,
         os.path.basename(sf_dir.rstrip("/")),
     )
+
+
+def fresh_tmp_dir(spark: SparkSession, kind: str, sf_dir: str) -> str:
+    """:func:`session_tmp_dir`, emptied: whatever an earlier build of
+    this session left at the path is removed, so a (re)build always
+    writes into an empty directory."""
+    import shutil
+
+    path = session_tmp_dir(spark, kind, sf_dir)
+    shutil.rmtree(path, ignore_errors=True)
+    return path
+
+
+def memo(
+    spark: SparkSession,
+    family: str,
+    key: Hashable,
+    build: Callable[[], T],
+    rebuild: bool = False,
+) -> T:
+    """The session memo: ``build()``'s result, cached in the dict on
+    ``spark._quty_<family>`` under ``key``. ``build`` runs on a miss or
+    when ``rebuild`` is set (the forced rebuild of the write-once sinks).
+
+    Contract, shared by every memoized artifact path, label table and
+    training state in the package:
+
+    - The state is per session: it rides on the SparkSession object, so
+      a fresh driver session always rebuilds and correctness never
+      depends on the cache. A build that writes files writes under
+      :func:`session_tmp_dir` (emptied first, :func:`fresh_tmp_dir`),
+      keyed by the application id, so a concurrent session's rebuild
+      never deletes files under this session's cached reader (r10
+      ADVICE).
+    - The attribute names (``_quty_cluster_labels``,
+      ``_quty_bpe_state``, …) are a stable reset interface: bench and
+      measurement tools, including ones that import older checkouts,
+      clear or replace those dicts by name to time a build cold. Never
+      rename a family.
+    - There is no lock: two threads that first-build one key both run
+      ``build`` into the same directory, so callers that fork legs
+      build the shared entries serially first.
+    """
+    attr = f"_quty_{family}"
+    cache = getattr(spark, attr, None)
+    if cache is None:
+        cache = {}
+        setattr(spark, attr, cache)
+    if rebuild or key not in cache:
+        cache[key] = build()
+    return cache[key]

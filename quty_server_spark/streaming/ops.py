@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
@@ -58,7 +59,7 @@ from quty_server_spark.operators.dedup import (
 from quty_server_spark.operators._helpers import load_table
 from quty_server_spark.operators.similarity import SQL_EMB_GATE
 from quty_server_spark.plans.registry import registry
-from quty_server_spark.session import configure, session_tmp_dir
+from quty_server_spark.session import configure, fresh_tmp_dir
 
 EVENTS_RAW_SCHEMA = StructType(
     [
@@ -101,18 +102,24 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def run_available(writer: DataStreamWriter) -> None:
+    """Start a configured stream writer under the bounded
+    ``availableNow`` trigger and block until it terminates: every row
+    the source holds at start is processed (in as many micro-batches
+    as the source's rate limits cut), then the query stops. The one
+    stream run every streaming operator here shares."""
+    writer.trigger(availableNow=True).start().awaitTermination()
+
+
 def run_to_memory(df: DataFrame, name: str, output_mode: str) -> DataFrame:
     """Run a streaming DataFrame to completion (availableNow) into a memory
     sink and return the materialized table."""
     spark = df.sparkSession
-    q = (
+    run_available(
         df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return spark.table(name)
 
 
@@ -128,23 +135,15 @@ def run_to_parquet(df: DataFrame, name: str, sf_dir: str) -> DataFrame:
     the sink only changes WHERE the materialization lives. Fresh dirs
     per call, so every invocation re-runs the stream from the source
     exactly like the memory sink (no cross-run reuse)."""
-    import shutil
-
-    from quty_server_spark.session import session_tmp_dir
-
     spark = df.sparkSession
-    root = os.path.join(session_tmp_dir(spark, "stream_sink", sf_dir), name)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_tmp_dir(spark, f"stream_sink_{name}", sf_dir)
     out, ckpt = os.path.join(root, "data"), os.path.join(root, "ckpt")
-    q = (
+    run_available(
         df.writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return spark.read.schema(df.schema).parquet(out)
 
 
@@ -571,13 +570,10 @@ def stream_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shutil.rmtree(outdir, ignore_errors=True)
     os.makedirs(outdir)
-    q = (
+    run_available(
         agg.writeStream.foreachBatch(_epoch_writer(outdir))
         .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     upd = spark.read.option("basePath", outdir).parquet(
         os.path.join(outdir, "epoch=*")
     )
@@ -1117,13 +1113,10 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("hour_start"), "n")
     )
-    q = (
+    run_available(
         agg.writeStream.foreachBatch(_epoch_writer(outdir))
         .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     upd = spark.read.option("basePath", outdir).parquet(os.path.join(outdir, "epoch=*"))
     return upd.groupBy("hour_start").agg(F.max_by("n", "epoch").alias("n"))
 
@@ -1175,13 +1168,10 @@ def checkpoint_recovery_run(spark: SparkSession, sf_dir: str) -> dict:
         out = s.filter(F.col("event_type") == "purchase").select(
             "event_id", "user_id", "value"
         )
-        q = (
+        run_available(
             out.writeStream.foreachBatch(_epoch_writer(outdir))
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
         return sorted(
             int(d.split("=", 1)[1])
             for d in os.listdir(outdir)
@@ -1246,12 +1236,9 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(os.path.join(outdir, f"epoch={epoch_id}"))
 
-    q = (
+    run_available(
         s.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return spark.read.parquet(os.path.join(outdir, "epoch=*")).select(
         "event_id", "event_type", "value"
     )
@@ -1386,13 +1373,10 @@ def kafka_replay_run(spark: SparkSession, sf_dir: str) -> dict:
         raw = spark.readStream.schema(KAFKA_RECORD_SCHEMA).parquet(indir)
         # Consumer-side envelope parse happens downstream (kafka_wire_decode
         # covers it); the replay path forwards records as-is.
-        q = (
+        run_available(
             raw.writeStream.foreachBatch(_epoch_writer(outdir))
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
         return sorted(
             int(d.split("=", 1)[1])
             for d in os.listdir(outdir)
@@ -1696,13 +1680,10 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bound is a guard, the loop exits on row-count convergence.
     for _ in range(6):
         raw = spark.readStream.format("quty_synth_stream").load()
-        q = (
+        run_available(
             raw.writeStream.foreachBatch(_epoch_writer(outdir))
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
         if any(d.startswith("epoch=") for d in os.listdir(outdir)):
             got = (
                 spark.read.option("basePath", outdir)
@@ -1744,18 +1725,16 @@ def _run_ingest_gate_stream(
     hash-partitioned files, stream them one-file-per-trigger, apply the
     family's per-batch gate inside ``foreachBatch`` with an epoch-keyed
     idempotent parquet sink, and return the union of all epochs.
-    Scratch dirs are session-keyed (session_tmp_dir) and the returned
+    Scratch dirs are session-keyed (fresh_tmp_dir) and the returned
     frame is eagerly ``localCheckpoint``-ed, so a later call for the
-    same sf_dir — which rmtree's and restages — can never invalidate a
+    same sf_dir — which clears and restages — can never invalidate a
     frame this call already handed out (r10 ADVICE)."""
-    from quty_server_spark.session import session_tmp_dir
 
     configure(spark)
-    base = session_tmp_dir(spark, kind, sf_dir)
+    base = fresh_tmp_dir(spark, kind, sf_dir)
     indir = os.path.join(base, "in")
     outdir = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
 
     # Stage the incoming shard as 4 files -> 4 micro-batches under
     # maxFilesPerTrigger=1 (hash-partitioned on the id, so batch
@@ -1776,13 +1755,10 @@ def _run_ingest_gate_stream(
         .option("maxFilesPerTrigger", 1)
         .parquet(indir)
     )
-    q = (
+    run_available(
         stream.writeStream.foreachBatch(gate_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return (
         spark.read.parquet(os.path.join(outdir, "epoch=*"))
         .select(*out_cols)
@@ -2256,15 +2232,13 @@ def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         simhash_bands,
         simhash_sigs_docs,
     )
-    from quty_server_spark.session import session_tmp_dir
 
     configure(spark)
-    base = session_tmp_dir(spark, "quty_stream_clabels", sf_dir)
+    base = fresh_tmp_dir(spark, "quty_stream_clabels", sf_dir)
     indir = os.path.join(base, "in")
     sig_path = os.path.join(base, "sig")
     lbl_path = os.path.join(base, "labels")
     ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
 
     # Private mutable copies of the two standing artifacts: the lake's
     # banded signatures (grown by each epoch's append) and the lake-only
@@ -2322,16 +2296,13 @@ def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             band_f.result()
 
-    q = (
+    run_available(
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(indir)
         .writeStream.foreachBatch(gate_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return (
         spark.read.parquet(lbl_path)
         .groupBy(F.col("lbl").alias("cluster_id"))
@@ -2406,16 +2377,14 @@ def stream_corpus_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         simhash_sigs_docs,
     )
     from quty_server_spark.operators.pipeline import snapshot_quality_keep
-    from quty_server_spark.session import session_tmp_dir
 
     configure(spark)
-    base = session_tmp_dir(spark, "quty_stream_snapshot", sf_dir)
+    base = fresh_tmp_dir(spark, "quty_stream_snapshot", sf_dir)
     indir = os.path.join(base, "in")
     outdir = os.path.join(base, "out")
     sig_path = os.path.join(base, "sig")
     lbl_path = os.path.join(base, "labels")
     ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
 
     # Same setup-overlap device as stream_cluster_maintenance: resolve
     # the memoized artifacts first, then run the three independent
@@ -2516,16 +2485,13 @@ def stream_corpus_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
                 band_f.result()
             admit_f.result()
 
-    q = (
+    run_available(
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(indir)
         .writeStream.foreachBatch(gate_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     prov = spark.read.parquet(outdir).select(
         "doc_id", "lang", "source", "n_tokens", "dup_ppm"
     )
@@ -2604,12 +2570,11 @@ def stream_ingest_exact_dedup_sequential(
     hashes, 32 bytes each. This is the production shape of a streaming
     exactly-once admission ledger."""
     configure(spark)
-    base = session_tmp_dir(spark, "quty_stream_seq_dedup", sf_dir)
+    base = fresh_tmp_dir(spark, "quty_stream_seq_dedup", sf_dir)
     indir = os.path.join(base, "in")
     outdir = os.path.join(base, "out")
     seendir = os.path.join(base, "seen")
     ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
     os.makedirs(indir)
 
     corpus = duped_corpus(spark, sf_dir)
@@ -2674,16 +2639,13 @@ def stream_ingest_exact_dedup_sequential(
             F.col("text_md5").alias("h"), F.col("epoch")
         ).write.mode("append").parquet(seendir)
 
-    q = (
+    run_available(
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(indir)
         .writeStream.foreachBatch(gate_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return (
         spark.read.parquet(os.path.join(outdir, "e*"))
         .select("admitted_doc_id", "epoch", "text_md5")
@@ -2741,8 +2703,7 @@ def stream_lake_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     configure(spark)
-    base = session_tmp_dir(spark, "quty_stream_retract", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
+    base = fresh_tmp_dir(spark, "quty_stream_retract", sf_dir)
     indir = os.path.join(base, "in")
     ckpt = os.path.join(base, "ckpt")
 
@@ -2786,16 +2747,13 @@ def stream_lake_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
             _write_tombstones(spark, paths[fam], doc_ids)
         _write_tombstones(spark, paths["ivf"], vec_ids)
 
-    q = (
+    run_available(
         spark.readStream.schema(feed.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(indir)
         .writeStream.foreachBatch(tombstone_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return _tagged_retract_summary(
         {
             fam: read_artifact_live(
@@ -2862,8 +2820,7 @@ def stream_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     configure(spark)
-    base = session_tmp_dir(spark, "quty_stream_train_shards", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
+    base = fresh_tmp_dir(spark, "quty_stream_train_shards", sf_dir)
     indir = os.path.join(base, "in")
     ckpt = os.path.join(base, "ckpt")
     outbase = os.path.join(base, "out", "base")
@@ -2886,16 +2843,13 @@ def stream_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="overwrite",
         )
 
-    q = (
+    run_available(
         spark.readStream.schema(adds.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(indir)
         .writeStream.foreachBatch(append_epoch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     # Empty epochs commit an empty root (no shard=N files) — skip them:
     # schema inference has nothing to read there, and an empty slice
     # contributes no rows by definition.

@@ -175,6 +175,59 @@ def test_component_labels_memoized_per_session_and_sf(spark):
     assert first.count() == second.count()
 
 
+def test_session_memo_builds_once_resets_by_name_and_clears_dir(spark):
+    # The one session memo behind every artifact path, label table and
+    # training state: build runs once per key, rebuild=True runs it
+    # again, and the by-name reset bench.py and perfbench apply
+    # (setattr(spark, "_quty_cluster_labels", {})) makes the next call
+    # rebuild. Python-callable builders, so no Spark job starts.
+    import os
+
+    from quty_server_spark.session import fresh_tmp_dir, memo, session_tmp_dir
+
+    saved = getattr(spark, "_quty_cluster_labels", None)
+    calls = []
+
+    def builder(key):
+        def build():
+            calls.append(key)
+            return object()
+
+        return build
+
+    try:
+        spark._quty_cluster_labels = {}
+        a = memo(spark, "cluster_labels", "sf_a", builder("a"))
+        assert memo(spark, "cluster_labels", "sf_a", builder("a")) is a
+        b = memo(spark, "cluster_labels", "sf_b", builder("b"))
+        assert b is not a and calls == ["a", "b"]
+        a2 = memo(spark, "cluster_labels", "sf_a", builder("a"), rebuild=True)
+        assert a2 is not a and calls == ["a", "b", "a"]
+        assert memo(spark, "cluster_labels", "sf_a", builder("a")) is a2
+        assert set(spark._quty_cluster_labels) == {"sf_a", "sf_b"}
+        setattr(spark, "_quty_cluster_labels", {})
+        a3 = memo(spark, "cluster_labels", "sf_a", builder("a"))
+        assert a3 is not a2 and calls == ["a", "b", "a", "a"]
+        # The in-place reset of tools/ab_bench.py works the same way.
+        spark._quty_cluster_labels.clear()
+        memo(spark, "cluster_labels", "sf_a", builder("a"))
+        assert calls == ["a", "b", "a", "a", "a"]
+    finally:
+        spark._quty_cluster_labels = saved
+
+    # A rebuild's directory starts empty even when an earlier build of
+    # this session left files there; session_tmp_dir alone only locates
+    # the directory and leaves its contents for readers.
+    path = fresh_tmp_dir(spark, "quty_memo_test", "/data/sf_x")
+    os.makedirs(os.path.join(path, "part=0"))
+    with open(os.path.join(path, "part=0", "f.parquet"), "w") as fh:
+        fh.write("stale")
+    assert session_tmp_dir(spark, "quty_memo_test", "/data/sf_x") == path
+    assert os.listdir(path) == ["part=0"]
+    assert fresh_tmp_dir(spark, "quty_memo_test", "/data/sf_x") == path
+    assert not os.path.exists(path) or os.listdir(path) == []
+
+
 def test_incremental_simhash_equals_restricted_full_pairs(spark):
     # The asymmetric shard-vs-lake join must find EXACTLY the full pair
     # set restricted to (incoming, lake) — no pair invented, none lost at
